@@ -169,13 +169,12 @@ object TableFormat {
     val countsJson = counts.map { case (b, n) => s""""$b": $n""" }.mkString("{", ", ", "}")
     val metrics = s"""{"rows": ${counts.map(_._2).sum}, "files": $nFiles, """ +
       s""""bytes": $nBytes, "write_ms": $writeMs}"""
-    // JSON-escape quotes/backslashes in the flat fields: untrusted strings
-    // (the HTTP surface's update_id stamp) ride here, and an unescaped quote
-    // would corrupt the store's completeness marker. readManifest's field
-    // regex already unescapes \" and \\ symmetrically.
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    // JSON-quote the flat fields: untrusted strings (the HTTP surface's
+    // update_id stamp) ride here, and an unescaped quote or control char
+    // would corrupt the store's completeness marker. readManifest decodes
+    // the same escapes.
     val kv = (fields + ("wall_ms" -> System.currentTimeMillis().toString))
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }.mkString(", ")
+      .map { case (k, v) => s"""${jsonString(k)}: ${jsonString(v)}""" }.mkString(", ")
     val json = s"""{$kv, "partition_rows": $countsJson, "metrics": $metrics, "complete": true}"""
     // Atomic publish: the manifest is the stage's "complete" marker, so a
     // crash mid-write must not leave a readable half manifest (resume would
@@ -204,6 +203,34 @@ object TableFormat {
     def buckets: Int = fields.getOrElse("buckets", "32").toInt
   }
 
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * char escaped. */
+  private[graft] def jsonString(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"'           => sb.append("\\\"")
+      case '\\'          => sb.append("\\\\")
+      case '\n'          => sb.append("\\n")
+      case '\r'          => sb.append("\\r")
+      case '\t'          => sb.append("\\t")
+      case c if c < ' '  => sb.append(f"\\u${c.toInt}%04x")
+      case c             => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
+  private val jsonEscapeRe = """\\(u[0-9a-fA-F]{4}|.)""".r
+
+  /** Decode the escapes [[jsonString]] writes in a string literal's body. */
+  private def jsonUnescape(s: String): String =
+    jsonEscapeRe.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(m.group(1) match {
+      case "n" => "\n"
+      case "r" => "\r"
+      case "t" => "\t"
+      case u if u.length == 5 => Integer.parseInt(u.substring(1), 16).toChar.toString
+      case c => c
+    }))
+
   private val manifestFieldRe =
     """"([A-Za-z_][A-Za-z0-9_]*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
   private val manifestLeafRe = """"([^"]+)"\s*:\s*(\d+)""".r
@@ -216,7 +243,7 @@ object TableFormat {
   def readManifest(path: String): Manifest = {
     val text = Files.readString(Paths.get(path, "_manifest.json"))
     val fields = manifestFieldRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(2).replaceAll("""\\(.)""", "$1")).toMap
+      .map(m => m.group(1) -> jsonUnescape(m.group(2))).toMap
     def block(name: String): String = {
       val at = text.indexOf(s""""$name"""")
       if (at < 0) "{}"

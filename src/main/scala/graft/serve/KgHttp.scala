@@ -2,6 +2,7 @@ package graft.serve
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.io.TableFormat.jsonString
 import graft.kg.Sparql
 import org.apache.spark.sql.DataFrame
 
@@ -34,33 +35,22 @@ object KgHttp {
 
   private val mapper = new ObjectMapper()
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"'           => sb.append("\\\"")
-      case '\\'          => sb.append("\\\\")
-      case '\n'          => sb.append("\\n")
-      case '\r'          => sb.append("\\r")
-      case '\t'          => sb.append("\\t")
-      case c if c < ' '  => sb.append(f"\\u${c.toInt}%04x")
-      case c             => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
-  private def detail(msg: String): String = s"""{"detail":${jsonStr(String.valueOf(msg))}}"""
+  private def detail(msg: String): String = s"""{"detail":${jsonString(String.valueOf(msg))}}"""
 
   /** A read that failed because the parquet facade's files moved under it —
     * an update overwrote/deleted leaf files the served frame's FileIndex
     * still lists. Spark surfaces this as a FileNotFoundException somewhere
     * in the cause chain, or the "REFRESH TABLE" advice message. */
   private[graft] def isStaleRead(e: Throwable): Boolean = {
+    // identity set of visited throwables: a cause cycle ends the walk
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Throwable, java.lang.Boolean])
     var c: Throwable = e
-    while (c != null) {
+    while (c != null && seen.add(c)) {
       if (c.isInstanceOf[java.io.FileNotFoundException]) return true
       val m = String.valueOf(c.getMessage)
       if (m.contains("REFRESH TABLE") || m.contains("FILE_NOT_EXIST")) return true
-      c = if (c.getCause eq c) null else c.getCause
+      c = c.getCause
     }
     false
   }
@@ -77,11 +67,11 @@ object KgHttp {
         val v = r.get(i)
         if (v == null) "null" else v match {
           case n: java.lang.Long => n.toString
-          case other             => jsonStr(other.toString)
+          case other             => jsonString(other.toString)
         }
       }.mkString("[", ",", "]")
     }.mkString("[", ",", "]")
-    s"""{"columns":${cols.map(jsonStr).mkString("[", ",", "]")},""" +
+    s"""{"columns":${cols.map(jsonString).mkString("[", ",", "]")},""" +
       s""""rows":$rowsJson,"n":${shown.length},"truncated":$truncated}"""
   }
 
@@ -120,9 +110,9 @@ object KgHttp {
                 if (root == null || !root.has("query") || !root.get("query").isTextual)
                   (400, detail("body must be a JSON object with a string 'query' field"))
                 else {
-                  val (t, st) = state.get()
+                  val frame = state.get()
                   val q = root.get("query").asText
-                  try (200, runQuery(t, q, maxRows, st))
+                  try (200, runQuery(frame._1, q, maxRows, frame._2))
                   catch {
                     // stale-file read: a store update raced this query and
                     // replaced leaf files the served frame still lists. A
@@ -130,13 +120,20 @@ object KgHttp {
                     // stats from the committed store and retry once —
                     // instead of handing an innocent reader a 500 (the
                     // Iceberg-snapshot upgrade removes the race entirely).
+                    // The reload holds the writer's lock, so it never sees a
+                    // half-done commit, and replaces only the frame that
+                    // failed: a newer one the update handler published wins.
                     case e: Exception if isStaleRead(e) && storePath.isDefined =>
-                      val sp = storePath.get
-                      val spark = t.sparkSession
-                      spark.catalog.refreshByPath(sp)
-                      val fresh = (graft.io.TableFormat.load(spark, sp),
-                        Some(graft.kg.Pattern.predStatsFromManifest(sp)))
-                      state.set(fresh)
+                      val fresh = updateLock.synchronized {
+                        if (state.get() eq frame) {
+                          val sp = storePath.get
+                          val spark = frame._1.sparkSession
+                          spark.catalog.refreshByPath(sp)
+                          state.compareAndSet(frame, (graft.io.TableFormat.load(spark, sp),
+                            Some(graft.kg.Pattern.predStatsFromManifest(sp))))
+                        }
+                        state.get()
+                      }
                       (200, runQuery(fresh._1, q, maxRows, fresh._2))
                   }
                 }

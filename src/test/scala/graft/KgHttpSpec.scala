@@ -183,6 +183,19 @@ class KgHttpSpec extends AnyFunSuite {
     } finally KgHttp.stop(server)
   }
 
+  test("isStaleRead ends on a cause cycle and finds a FileNotFoundException three causes deep") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val a = new RuntimeException("a")
+    val b = new RuntimeException("b")
+    a.initCause(b); b.initCause(a)
+    val deep = new RuntimeException("1", new RuntimeException("2",
+      new RuntimeException("3", new java.io.FileNotFoundException("leaf"))))
+    assert(!Await.result(Future(KgHttp.isStaleRead(a)), 10.seconds))
+    assert(Await.result(Future(KgHttp.isStaleRead(deep)), 10.seconds))
+  }
+
   private def jstr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

@@ -172,6 +172,21 @@ class UpdateSpec extends AnyFunSuite {
     manifestCountsMatchScan(store)
   }
 
+  test("update-id with quotes, backslashes and control chars: manifest stays valid JSON; replay skips") {
+    val store = freshStore()
+    val id = "a\"b\\c\nd\te\u0001"
+    val script =
+      "INSERT DATA { ent:9 category LOC } ; DELETE DATA { ent:4 sameAs ent:1 }"
+    assert(Sparql.update(spark, store, script, updateId = Some(id)).forall(!_.skipped))
+    val manifest = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Paths.get(store, "_manifest.json").toFile)
+    assert(manifest.get("update_id").asText === id)
+    assert(TableFormat.readManifest(store).fields("update_id") === id)
+    val snap = readTriples(store)
+    assert(Sparql.update(spark, store, script, updateId = Some(id)).forall(_.skipped))
+    assert(readTriples(store) === snap)
+  }
+
   test("parser guards: variables in DATA, unbound template var, non-plain DELETE WHERE, bad head") {
     val store = freshStore()
     assert(intercept[IllegalArgumentException] {
